@@ -1,12 +1,15 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftglue.ColumnGlue
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
 
 /** Native codegen vector kernels over `ARRAY<DOUBLE>` columns.
   *
@@ -328,6 +331,279 @@ object VectorExpressions {
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
+  }
+
+  /** Fused blocked k-NN kernel: ONE query scored against ONE block of
+    * data rows, keeping only that block's top-`k` as
+    * `ARRAY<STRUCT<neighbor_id: BIGINT, score: DOUBLE>>`, best first.
+    * [[graft.operators.VectorSearch.knnJoin]] joins every query with
+    * every block and ranks the union of the per-block lists, so the
+    * pair stream never exists as rows.
+    *
+    * Block layout (three arrays, one entry per data row, in row order):
+    * `blockIds` the row ids, `blockLens` each row's vector length (−1
+    * for a null vector), `blockVecs` the non-null vectors concatenated.
+    *
+    * Per pair the arithmetic and the failures are the row kernels':
+    * `euclidean = false` is [[VecDot]] (the cosine pair score over
+    * prepared vectors, and dot), `euclidean = true` is
+    * `1 / (1 + `[[VecEuclideanDistance]]`)` (the Euclidean similarity) —
+    * the same ascending-index fold from 0.0, the query as the left
+    * operand, the same length-mismatch and null-element errors under the
+    * same name. A null query or row vector scores null. `excludeSelf`
+    * drops rows whose id equals the query id or where either id is null
+    * (the SQL `query_id != neighbor_id` filter).
+    *
+    * Order: non-null scores first, descending by Spark's double ordering
+    * (`SQLOrderingUtil.compareDoubles`: NaN highest, −0.0 = 0.0), then id
+    * ascending with null ids first — the `desc(score), asc(id)` order of
+    * the ranking window, so each query's global top-k is contained in the
+    * union of its per-block lists. */
+  case class VecBlockTopK(queryId: Expression, query: Expression,
+      blockIds: Expression, blockLens: Expression, blockVecs: Expression,
+      euclidean: Boolean, k: Int, excludeSelf: Boolean) extends Expression {
+
+    override def children: Seq[Expression] =
+      Seq(queryId, query, blockIds, blockLens, blockVecs)
+    override def nullable: Boolean = false
+    override def dataType: DataType = ArrayType(
+      StructType(Seq(
+        StructField("neighbor_id", LongType, nullable = true),
+        StructField("score", DoubleType, nullable = true))),
+      containsNull = false)
+    override def prettyName: String = "vec_block_topk"
+
+    override def checkInputDataTypes(): TypeCheckResult =
+      (queryId.dataType, blockIds.dataType, blockLens.dataType) match {
+        case (LongType, ArrayType(LongType, _), ArrayType(IntegerType, false)) =>
+          checkArrayDouble(prettyName, Seq(query.dataType, blockVecs.dataType))
+        case other => TypeCheckResult.TypeCheckFailure(
+          s"$prettyName expects (BIGINT, ARRAY<DOUBLE>, ARRAY<BIGINT>, " +
+            s"ARRAY<INT NOT NULL>, ARRAY<DOUBLE>), got $other")
+      }
+
+    private def guardQ = mayContainNull(query.dataType)
+    private def guardD = mayContainNull(blockVecs.dataType)
+
+    override def eval(input: InternalRow): Any = {
+      val qid = queryId.eval(input)
+      blockTopK(qid == null, if (qid == null) 0L else qid.asInstanceOf[Long],
+        query.eval(input).asInstanceOf[ArrayData],
+        blockIds.eval(input).asInstanceOf[ArrayData],
+        blockLens.eval(input).asInstanceOf[ArrayData],
+        blockVecs.eval(input).asInstanceOf[ArrayData],
+        euclidean, k, excludeSelf, guardQ, guardD)
+    }
+
+    // the generated code only marshals the inputs: the scoring and
+    // selection loops are ONE shared Scala method, so eval and codegen
+    // cannot drift and the JIT compiles the hot loop once
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val Seq(qid, q, ids, lens, vecs) = children.map(_.genCode(ctx))
+      def orNull(e: ExprCode) = s"(${e.isNull} ? null : ${e.value})"
+      ev.copy(code = code"""
+        |${qid.code}
+        |${q.code}
+        |${ids.code}
+        |${lens.code}
+        |${vecs.code}
+        |${CodeGenerator.javaType(dataType)} ${ev.value} =
+        |  graft.expressions.VectorExpressions$$.MODULE$$.blockTopK(
+        |    ${qid.isNull}, ${qid.value}, ${orNull(q)},
+        |    ${orNull(ids)}, ${orNull(lens)}, ${orNull(vecs)},
+        |    $euclidean, $k, $excludeSelf, $guardQ, $guardD);
+        """.stripMargin, isNull = FalseLiteral)
+    }
+
+    override protected def withNewChildrenInternal(
+        newChildren: IndexedSeq[Expression]): Expression =
+      copy(queryId = newChildren(0), query = newChildren(1),
+        blockIds = newChildren(2), blockLens = newChildren(3),
+        blockVecs = newChildren(4))
+  }
+
+  /** The block kernel's scoring loops, kept in small methods of their own
+    * so the JIT compiles them apart from the bookkeeping around them, one
+    * per metric because a metric test inside the loop cost ~40% on dim-64
+    * rows: `score(r)` for the first `ns` entries `r` of `rows`, whose
+    * vectors start at the byte offsets `offs` into `base`. Four rows share
+    * each sweep of the query — four independent folds keep the FPU
+    * pipeline full, while each row's own fold is the row kernel's
+    * ascending-index sum from 0.0 with the query on the left:
+    * [[VecDot]]'s products, or [[VecEuclideanDistance]]'s squared
+    * differences mapped to `1 / (1 + sqrt(sum))`. */
+  private def dotRows(qa: Array[Double], base: AnyRef, offs: Array[Long],
+      rows: Array[Int], ns: Int, score: Array[Double]): Unit = {
+    val n = qa.length
+    var t = 0
+    while (t + 4 <= ns) {
+      val o0 = offs(t); val o1 = offs(t + 1); val o2 = offs(t + 2); val o3 = offs(t + 3)
+      var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
+      var i = 0
+      while (i < n) {
+        val x = qa(i); val b = 8L * i
+        a0 += x * Platform.getDouble(base, o0 + b)
+        a1 += x * Platform.getDouble(base, o1 + b)
+        a2 += x * Platform.getDouble(base, o2 + b)
+        a3 += x * Platform.getDouble(base, o3 + b)
+        i += 1
+      }
+      score(rows(t)) = a0; score(rows(t + 1)) = a1
+      score(rows(t + 2)) = a2; score(rows(t + 3)) = a3
+      t += 4
+    }
+    while (t < ns) {
+      val o = offs(t)
+      var a = 0.0
+      var i = 0
+      while (i < n) { a += qa(i) * Platform.getDouble(base, o + 8L * i); i += 1 }
+      score(rows(t)) = a
+      t += 1
+    }
+  }
+
+  private def euclidRows(qa: Array[Double], base: AnyRef, offs: Array[Long],
+      rows: Array[Int], ns: Int, score: Array[Double]): Unit = {
+    val n = qa.length
+    var t = 0
+    while (t + 4 <= ns) {
+      val o0 = offs(t); val o1 = offs(t + 1); val o2 = offs(t + 2); val o3 = offs(t + 3)
+      var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
+      var i = 0
+      while (i < n) {
+        val x = qa(i); val b = 8L * i
+        val d0 = x - Platform.getDouble(base, o0 + b); a0 += d0 * d0
+        val d1 = x - Platform.getDouble(base, o1 + b); a1 += d1 * d1
+        val d2 = x - Platform.getDouble(base, o2 + b); a2 += d2 * d2
+        val d3 = x - Platform.getDouble(base, o3 + b); a3 += d3 * d3
+        i += 1
+      }
+      score(rows(t)) = 1.0 / (1.0 + math.sqrt(a0))
+      score(rows(t + 1)) = 1.0 / (1.0 + math.sqrt(a1))
+      score(rows(t + 2)) = 1.0 / (1.0 + math.sqrt(a2))
+      score(rows(t + 3)) = 1.0 / (1.0 + math.sqrt(a3))
+      t += 4
+    }
+    while (t < ns) {
+      val o = offs(t)
+      var a = 0.0
+      var i = 0
+      while (i < n) {
+        val d = qa(i) - Platform.getDouble(base, o + 8L * i); a += d * d; i += 1
+      }
+      score(rows(t)) = 1.0 / (1.0 + math.sqrt(a))
+      t += 1
+    }
+  }
+
+  /** Runtime body of [[VecBlockTopK]] — static so generated code calls it
+    * directly. A null block input yields an empty list. */
+  def blockTopK(qidNull: Boolean, qid: Long, q: ArrayData,
+      ids: ArrayData, lens: ArrayData, vecs: ArrayData,
+      euclidean: Boolean, k: Int, excludeSelf: Boolean,
+      guardQ: Boolean, guardD: Boolean): ArrayData = {
+    if (ids == null || lens == null || vecs == null || k <= 0)
+      return new GenericArrayData(Array.empty[Any])
+    val name = if (euclidean) "vec_euclidean_distance" else "vec_dot"
+    val rows = ids.numElements()
+    // the scoring loops read the vectors without bounds checks, so the
+    // block's arrays must agree before anything is read
+    var total = 0L
+    var r = 0
+    while (r < lens.numElements()) { total += math.max(lens.getInt(r), 0); r += 1 }
+    if (lens.numElements() != rows || total != vecs.numElements())
+      throw new IllegalArgumentException(s"vec_block_topk: malformed block " +
+        s"($rows ids, ${lens.numElements()} lengths summing to $total, " +
+        s"${vecs.numElements()} vector elements)")
+    val n = if (q == null) -1 else q.numElements()
+    val qa = new Array[Double](math.max(n, 0))
+    // a null query element fails every pair at its index, unless the row
+    // fails earlier — both row kernels raise at the FIRST null slot of
+    // either side, after the length check
+    var qNull = n
+    var i = 0
+    while (i < n) {
+      if (guardQ && q.isNullAt(i)) { if (qNull == n) qNull = i }
+      else qa(i) = q.getDouble(i)
+      i += 1
+    }
+    // the vectors are read in place from the block's backing memory:
+    // through `ArrayData.getDouble` the scoring loops ran 2–3× slower,
+    // and a per-call copy of the block slower still
+    val (base, baseOff) = vecs match {
+      case u: UnsafeArrayData => (u.getBaseObject,
+        u.getBaseOffset + UnsafeArrayData.calculateHeaderPortionInBytes(u.numElements()))
+      case other =>
+        // only rows checked null-free below are ever read
+        (Array.tabulate(other.numElements())(j =>
+          if (other.isNullAt(j)) 0.0 else other.getDouble(j)),
+          Platform.DOUBLE_ARRAY_OFFSET.toLong)
+    }
+    // pass 1: self-exclusion, null scores and the row kernels' checks
+    val cand = new Array[Int](rows)   // surviving rows, block order
+    val scored = new Array[Int](rows) // surviving rows with a score
+    val offs = new Array[Long](rows)  // their vectors' byte offsets
+    val nullScore = new Array[Boolean](rows)
+    var nc = 0
+    var ns = 0
+    var off = 0
+    r = 0
+    while (r < rows) {
+      val len = lens.getInt(r)
+      if (!excludeSelf || !(qidNull || ids.isNullAt(r) || ids.getLong(r) == qid)) {
+        cand(nc) = r; nc += 1
+        if (n < 0 || len < 0) nullScore(r) = true
+        else {
+          if (len != n) lengthMismatch(name, n, len)
+          var bad = qNull
+          if (guardD) {
+            i = 0
+            while (i < bad) { if (vecs.isNullAt(off + i)) bad = i; i += 1 }
+          }
+          if (bad < n) nullElement(name, bad)
+          scored(ns) = r; offs(ns) = baseOff + 8L * off; ns += 1
+        }
+      }
+      if (len > 0) off += len
+      r += 1
+    }
+    // pass 2: scores
+    val score = new Array[Double](rows)
+    if (euclidean) euclidRows(qa, base, offs, scored, ns, score)
+    else dotRows(qa, base, offs, scored, ns, score)
+    // pass 3: bounded insertion sort under the ranking window's order
+    def better(a: Int, b: Int): Boolean =
+      if (nullScore(a) != nullScore(b)) !nullScore(a)
+      else {
+        val c = if (nullScore(a)) 0 else SQLOrderingUtil.compareDoubles(score(a), score(b))
+        if (c != 0) c > 0
+        else if (ids.isNullAt(a) || ids.isNullAt(b)) ids.isNullAt(a) && !ids.isNullAt(b)
+        else ids.getLong(a) < ids.getLong(b)
+      }
+    val m = math.min(k, nc)
+    val best = new Array[Int](m)
+    var filled = 0
+    var c = 0
+    while (c < nc) {
+      val row = cand(c)
+      if (filled < m || better(row, best(m - 1))) {
+        var pos = if (filled < m) filled else m - 1
+        while (pos > 0 && better(row, best(pos - 1))) { best(pos) = best(pos - 1); pos -= 1 }
+        best(pos) = row
+        if (filled < m) filled += 1
+      }
+      c += 1
+    }
+    val out = new Array[Any](m)
+    var j = 0
+    while (j < m) {
+      val b = best(j)
+      out(j) = InternalRow(
+        if (ids.isNullAt(b)) null else ids.getLong(b),
+        if (nullScore(b)) null else score(b))
+      j += 1
+    }
+    new GenericArrayData(out)
   }
 
   /** One-pass int8-quantization statistics over ARRAY<DOUBLE> — the
@@ -938,6 +1214,14 @@ object VectorExpressions {
   def euclideanDistance(a: Column, b: Column): Column =
     ColumnGlue.column(
       VecEuclideanDistance(ColumnGlue.expression(a), ColumnGlue.expression(b)))
+
+  def blockTopK(queryId: Column, query: Column, blockIds: Column,
+      blockLens: Column, blockVecs: Column,
+      euclidean: Boolean, k: Int, excludeSelf: Boolean): Column =
+    ColumnGlue.column(VecBlockTopK(
+      ColumnGlue.expression(queryId), ColumnGlue.expression(query),
+      ColumnGlue.expression(blockIds), ColumnGlue.expression(blockLens),
+      ColumnGlue.expression(blockVecs), euclidean, k, excludeSelf))
 
   def quantizeStatsCol(v: Column): Column =
     ColumnGlue.column(VecQuantizeStats(ColumnGlue.expression(v)))

@@ -304,6 +304,7 @@ object Sketches {
   def fingerprint(
       docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8, w: Int = 8): DataFrame = {
+    require(w >= 1, s"fingerprint: window w must be >= 1, got $w")
     val text = col(textCol)
     // hm_i·R + (R−1−i) for 1-based gram position i — one md5 per
     // positioned gram, exactly the window form's hash count
@@ -327,8 +328,10 @@ object Sketches {
     // offset-0 element is always present). Measured at sf10 (r18,
     // dedicated idle medians): 32.7s → 17.8s on q_fingerprint — the
     // per-gram array allocation was ~half the sketch's runtime.
+    // least needs two arguments: a one-gram window is the gram itself
     def slidingMin(i: Column): Column =
-      least((0 until w).map(o => try_element_at(col("__hmk"), i + lit(o))): _*)
+      if (w == 1) try_element_at(col("__hmk"), i)
+      else least((0 until w).map(o => try_element_at(col("__hmk"), i + lit(o))): _*)
     Partitioning.spread(docs)
       // two selects: materialize the packed-hash array once, then the
       // sliding-min transform references the BOUND column — inlining it

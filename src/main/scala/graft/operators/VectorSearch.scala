@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, IntegerType, LongType, ShortType, StructField, StructType}
 
 import graft.expressions.VectorExpressions
 import graft.functions.Metric
@@ -22,11 +23,17 @@ import graft.functions.Metric
   *    (O(N·M·dim)) — the norm never recomputes inside the pair loop, and
   *    the single-expression kernel cannot be torn apart by
   *    `CollapseProject` (the round-1 O(dim²) defect).
-  *  - [[knnJoin]] does NOT broadcast by default: at 100 TB the data side
-  *    does not fit an executor. Pass `broadcastData = true` only when the
-  *    data side is a known-small dimension table; otherwise use
-  *    [[bucketedKnnJoin]], which shuffles both sides by a deterministic
-  *    LSH bucket id — per-bucket equi-join instead of all-pairs.
+  *  - [[knnJoin]] never materializes the O(N·M) pair stream as rows: the
+  *    data side is packed into fixed-size blocks inside its own
+  *    partitions, and one fused kernel call per (query, block) scores the
+  *    whole block and keeps only its top-k
+  *    ([[graft.expressions.VectorExpressions.VecBlockTopK]]), so the
+  *    ranking window sorts at most k·nBlocks candidates per query. It
+  *    does NOT broadcast by default: at 100 TB the data side does not fit
+  *    an executor. Pass `broadcastData = true` only when the data side is
+  *    a known-small dimension table; otherwise use [[bucketedKnnJoin]],
+  *    which shuffles both sides by a deterministic LSH bucket id —
+  *    per-bucket equi-join instead of all-pairs.
   *
   * Determinism: every ordering tie-breaks on the id column
   * (SURVEY §2.4.2) — argsort on equal scores is arbitrary in the
@@ -79,18 +86,45 @@ object VectorSearch {
       .orderBy(desc("score"), asc(idCol))
       .limit(k)
 
+  /** Rows per data block of [[knnJoin]]'s fused kernel: at dim 64 a
+    * block's vectors are 128 KB, small enough to stay in a core's L2
+    * cache while one query sweeps it, and the kernel's top-k keeps
+    * k/256 of the block's pairs. */
+  val KnnBlockRows: Int = 256
+
   /** Batch knn: for every row of `queries`, its top-k neighbors in `data`
     * (the at-scale form of per-query search; replaces the reference's HNSW
     * serving path ann.py:67-102). Output: one row per (query, neighbor)
     * with `rank` (BIGINT, 1-based).
     *
-    * Scale: `broadcastData = true` turns the pair stage into a
-    * broadcast-nested-loop with NO shuffle of the (large) query side —
-    * right when data is a small dimension table. Default is false: Spark
-    * plans a shuffling cartesian and AQE decides; at real scale prefer
+    * Input contract: ids are integral (the kernel compares them as
+    * BIGINT; the output keeps each side's id type) and unique per side.
+    * A non-integral id column is rejected. A duplicated id is not an
+    * error, and the result is well defined: a data id held by several
+    * rows yields one candidate per row (the same `neighbor_id` can rank
+    * twice, with each copy's score); query rows sharing an id share ONE
+    * top-k over the union of their candidates; `excludeSelf` drops every
+    * data row carrying the query's id. Null ids never match under
+    * `excludeSelf` (the SQL `!=`), so such pairs are dropped.
+    *
+    * Execution: the metric-prepared data side is packed into blocks of
+    * [[KnnBlockRows]] rows inside each partition ([[blockify]] — no job,
+    * no shuffle, full blocks whatever the ids), every query is joined
+    * with every block, and ONE [[VectorExpressions.VecBlockTopK]] call
+    * per (query, block) scores the block's rows with the row kernels'
+    * exact arithmetic and keeps only its top-k. The per-query
+    * `row_number` window then ranks at most k·nBlocks candidates per
+    * query instead of N×M scored rows — no row per scored pair, no sort
+    * over the pair stream. Scores, ranks, tie order and errors are the
+    * row form's (pinned bit-for-bit by KnnBlockSpec).
+    *
+    * Join shape: `broadcastData = true` broadcasts the blocks — right
+    * when data is a small dimension table. Default is false: Spark plans
+    * from the blocks' size (a broadcast nested loop under the broadcast
+    * threshold, else a cartesian); at real scale prefer
     * [[bucketedKnnJoin]]. The per-query top-k is a `row_number` window
-    * partitioned by query id — shuffles once on a uniform key.
-    */
+    * partitioned by query id — shuffles once on a uniform key, with a
+    * partial `WindowGroupLimit` ahead of the exchange. */
   def knnJoin(
       queries: DataFrame,
       data: DataFrame,
@@ -101,32 +135,82 @@ object VectorSearch {
       excludeSelf: Boolean = true,
       broadcastData: Boolean = false,
       spreadQueries: Boolean = true,
-      broadcastQueries: Boolean = false): DataFrame = {
+      broadcastQueries: Boolean = false): DataFrame =
+    blockedKnnJoin(queries, data, vecCol, idCol, metric, k, excludeSelf,
+      broadcastData, spreadQueries, broadcastQueries)
+
+  /** [[knnJoin]] with the block size open to tests in this package. */
+  private[graft] def blockedKnnJoin(
+      queries: DataFrame,
+      data: DataFrame,
+      vecCol: String,
+      idCol: String,
+      metric: Metric,
+      k: Int,
+      excludeSelf: Boolean,
+      broadcastData: Boolean,
+      spreadQueries: Boolean,
+      broadcastQueries: Boolean,
+      blockRows: Int = KnnBlockRows): DataFrame = {
+    require(blockRows >= 1, s"knnJoin: blockRows must be >= 1, got $blockRows")
+    def idType(df: DataFrame): DataType = df.schema(idCol).dataType match {
+      case t @ (ByteType | ShortType | IntegerType | LongType) => t
+      case t => throw new IllegalArgumentException(
+        s"knnJoin: id column $idCol must be integral, got $t")
+    }
+    val (qIdType, dIdType) = (idType(queries), idType(data))
     // The O(N·M) pair work parallelizes over the streamed (query) side's
     // partitions; a small/single-file query table would otherwise pin the
     // whole join to a handful of tasks.
     val spread = if (spreadQueries && !broadcastQueries)
       Partitioning.spread(queries) else queries
     val q0 = prepareColumn(spread, vecCol, metric)
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qvec"))
+      .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("__qvec"))
     // broadcastQueries: the sample×corpus eval shape (recall rows — a
     // fixed ~1000-row query sample vs the full corpus). Broadcasting the
-    // SAMPLE makes the corpus the streamed side of the
-    // BroadcastNestedLoopJoin: every corpus partition is scanned and
-    // metric-prepared exactly ONCE, where the default CartesianProduct
-    // recomputes each corpus partition once per query partition (the
-    // corpus subtree runs |qPartitions|×). The per-query top-k stays a
-    // row_number
-    // window, whose partial WindowGroupLimit keeps ≤k rows per query per
-    // corpus partition ahead of the exchange. At 100 TB this is the only
-    // orientation that never moves or re-reads the corpus.
+    // SAMPLE makes the corpus blocks the streamed side of the
+    // BroadcastNestedLoopJoin: every corpus partition is scanned,
+    // metric-prepared and blocked exactly ONCE, where a CartesianProduct
+    // recomputes each corpus partition once per query partition. At
+    // 100 TB this is the only orientation that never moves or re-reads
+    // the corpus: blocks form inside the corpus's own partitions.
     val q = if (broadcastQueries) broadcast(q0) else q0
-    val d = prepareColumn(data, vecCol, metric)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__dvec"))
-    val dSide = if (broadcastData) broadcast(d) else d
-    val pairs = q.crossJoin(dSide)
-      .withColumn("score", metric.scorePrenormalized(col("__qvec"), col("__dvec")))
-    rankTopK(pairs, k, excludeSelf)
+    val blocks = blockify(prepareColumn(data, vecCol, metric)
+      .select(col(idCol).cast("long").as("__id"), col(vecCol).as("__dvec")), blockRows)
+    val bSide = if (broadcastData) broadcast(blocks) else blocks
+    val candidates = q.crossJoin(bSide)
+      .select(col("query_id"), inline(VectorExpressions.blockTopK(
+        col("query_id"), col("__qvec"), col("__ids"), col("__lens"), col("__vecs"),
+        euclidean = metric == Metric.Euclidean, k = k, excludeSelf = excludeSelf)))
+    rankTopK(candidates, k, excludeSelf = false)
+      .select(col("query_id").cast(qIdType).as("query_id"),
+        col("neighbor_id").cast(dIdType).as("neighbor_id"), col("score"), col("rank"))
+  }
+
+  /** Pack `(__id, __dvec)` rows into [[VectorExpressions.VecBlockTopK]]'s
+    * block layout, `blockRows` consecutive rows per block within each
+    * partition (only a partition's last block is short). A typed
+    * `mapPartitions`: lazy, no job, no exchange — the rows never leave
+    * their partition. */
+  private def blockify(d: DataFrame, blockRows: Int): DataFrame = {
+    val nullElems = d.schema("__dvec").dataType.asInstanceOf[ArrayType].containsNull
+    val schema = StructType(Seq(
+      StructField("__ids", ArrayType(LongType, d.schema("__id").nullable), nullable = false),
+      StructField("__lens", ArrayType(IntegerType, containsNull = false), nullable = false),
+      StructField("__vecs", ArrayType(DoubleType, nullElems), nullable = false)))
+    d.mapPartitions((rows: Iterator[Row]) =>
+      rows.grouped(blockRows).map(packBlock(_, nullElems)))(Encoders.row(schema))
+  }
+
+  /** One block. Lengths, and the vectors unless their type admits null
+    * elements, go out as primitive arrays, which the row encoder copies
+    * in one step. */
+  private def packBlock(rows: Seq[Row], nullElems: Boolean): Row = {
+    val vecs = rows.filterNot(_.isNullAt(1)).flatMap(_.getSeq[Any](1))
+    Row(
+      rows.map(r => if (r.isNullAt(0)) null else r.getLong(0)),
+      rows.map(r => if (r.isNullAt(1)) -1 else r.getSeq[Any](1).length).toArray,
+      if (nullElems) vecs else vecs.map(_.asInstanceOf[Double]).toArray)
   }
 
   /** Shared tail of the knn joins: optional self-exclusion, per-query
@@ -1021,7 +1105,14 @@ object VectorSearch {
     * buckets are the crowded, least-selective regions, so the measured
     * recall stays high — certified through the
     * q_ann_recall_multiprobe_scaled oracle row, same treatment as the
-    * multiband cap's recall rows. */
+    * multiband cap's recall rows.
+    *
+    * Input contract: ids are unique per side — the output's
+    * (query_id, neighbor_id) uniqueness rests on it (no candidate
+    * `distinct`). A duplicated id is not detected: its candidate rows
+    * re-attach to EVERY vector carrying that id, so the same
+    * (query_id, neighbor_id) pair can appear at several ranks, once per
+    * (query copy, data copy) combination. */
   def multiProbeKnnJoin(
       queries: DataFrame,
       data: DataFrame,

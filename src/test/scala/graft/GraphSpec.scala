@@ -45,6 +45,21 @@ class GraphSpec extends SparkSpec {
     assert(got.values.toSet == Set(1L))
   }
 
+  test("a star whose centre is not the minimum id labels every leaf with the minimum") {
+    val edges = Seq[(Long, Long)]((50, 10), (50, 60), (70, 50), (50, 5), (80, 50))
+    val got = run(edges)
+    assert(got == model(edges))
+    assert(got.values.toSet == Set(5L))
+  }
+
+  test("a chain with scrambled ids converges to its minimum") {
+    val path = Seq(7L, 3L, 9L, 12L, 1L, 8L, 2L, 11L, 4L)
+    val edges = path.zip(path.tail)
+    val got = run(edges)
+    assert(got == model(edges))
+    assert(got.keySet == path.toSet && got.values.toSet == Set(1L))
+  }
+
   test("disjoint components keep distinct min-id labels") {
     val edges = Seq[(Long, Long)](
       (5, 9), (9, 7), (20, 21), (30, 31), (31, 32), (32, 30))

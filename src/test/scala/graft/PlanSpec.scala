@@ -53,6 +53,21 @@ class PlanSpec extends SparkSpec {
 
   test("q_knn_join: partial top-k (WindowGroupLimit) runs below the exchange") {
     val p = planOf("q_knn_join")
+    // the fused block kernel carries the scoring; no sort runs over the pairs
+    assert(p.contains("vec_block_topk"), s"block kernel absent from the plan:\n$p")
+    // the node tree heading the formatted plan, as (depth, node) in
+    // pre-order: no Sort may reach the pair join without passing the
+    // kernel's Generate — that is, no sort runs over one row per pair
+    val tree = p.linesIterator.drop(1).takeWhile(!_.startsWith("(1)"))
+      .flatMap(l => raw"^([ :+\-]*)(\w+)".r.findFirstMatchIn(l))
+      .map(m => (m.group(1).length, m.group(2))).toSeq
+    for (((d, node), i) <- tree.zipWithIndex if node == "Sort") {
+      val below = tree.drop(i + 1).takeWhile(_._1 > d).map(_._2)
+      val join = below.indexWhere(n =>
+        n == "BroadcastNestedLoopJoin" || n == "CartesianProduct")
+      assert(join < 0 || below.take(join).contains("Generate"),
+        s"a Sort runs over the scored pair stream:\n$p")
+    }
     val limitIdx = p.indexOf("WindowGroupLimit")
     assert(limitIdx >= 0, s"no partial top-k:\n$p")
     // at least one WindowGroupLimit must appear DEEPER than the last
@@ -355,10 +370,10 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), s"re-attach no longer broadcast:\n$p")
     // formatted-mode SMJ details print their equi-keys as
     // "Left/Right keys [n]: [col#id, ...]" — a sort-merge re-attach
-    // would list a_id/b_id there
+    // would list a_id/b_id there, at any position in the list
     val smjBlocks = p.split(raw"\(\d+\) ").filter(_.startsWith("SortMergeJoin"))
     val onReattachKeys = smjBlocks.filter(b =>
-      raw"keys \[\d+\]: \[(a_id|b_id)#".r.findFirstIn(b).isDefined)
+      raw"keys \[\d+\]: \[[^\]]*\b(a_id|b_id)#".r.findFirstIn(b).isDefined)
     assert(onReattachKeys.isEmpty,
       s"candidates sort-merge-joined against the vector table:\n" +
         s"${onReattachKeys.mkString("\n---\n")}")

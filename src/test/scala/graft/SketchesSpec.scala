@@ -211,6 +211,24 @@ class SketchesSpec extends SparkSpec {
     }
   }
 
+  test("winnowing with w = 1 keeps every distinct positioned gram hash") {
+    val k = 4
+    val docs = Seq((1L, "abcabcab"), (2L, "xyz"), (3L, "")).toDF("doc_id", "text")
+    val got = Sketches.fingerprint(docs, "doc_id", "text", k, w = 1)
+      .select("doc_id", "fp_pos", "fp_hash").as[(Long, Long, Long)].collect().toSet
+    // every 1-based gram position (a short text is one gram) and its hash
+    val expected = docs
+      .select(col("doc_id"), posexplode(transform(
+        sequence(lit(1), greatest(length(col("text")) - (k - 1), lit(1))),
+        i => Sketches.shingleHash(col("text").substr(i, lit(k))))))
+      .select(col("doc_id"), (col("pos") + 1).cast("long"), col("col"))
+      .as[(Long, Long, Long)].collect().toSet
+    assert(got == expected)
+    assert(got.count(_._1 == 1L) == 5)
+    intercept[IllegalArgumentException](
+      Sketches.fingerprint(docs, "doc_id", "text", k, w = 0))
+  }
+
   test("winnowing density is ~2/(w+1) and selection is deterministic") {
     val docs = Tables.documents(spark, Sf0001).limit(50).cache()
     val fp = Sketches.fingerprint(docs, "doc_id", "text", 8, 8)

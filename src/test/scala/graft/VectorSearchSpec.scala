@@ -61,6 +61,27 @@ class VectorSearchSpec extends SparkSpec {
     assert(perQuery.count() == 0)
   }
 
+  test("knnJoin on duplicated ids: one row per data copy, query copies share one top-k") {
+    // the unique-id contract (knnJoin scaladoc) pinned on exact binary
+    // fractions: data id 2 has two vectors, query id 2 has two vectors
+    val data = Seq(
+      (1L, Seq(1.0, 0.0)), (2L, Seq(0.5, 0.5)), (2L, Seq(1.0, 0.25)),
+      (3L, Seq(0.0, 1.0)), (4L, Seq(0.5, 0.25))).toDF("vec_id", "embedding")
+    val queries = Seq(
+      (1L, Seq(1.0, 0.0)), (2L, Seq(1.0, 0.5)), (2L, Seq(0.25, 1.0)))
+      .toDF("vec_id", "embedding")
+    def run(excludeSelf: Boolean) =
+      VectorSearch.knnJoin(queries, data, "embedding", "vec_id", Metric.Dot,
+        k = 3, excludeSelf = excludeSelf)
+        .as[(Long, Long, Double, Long)].collect().toSeq.sortBy(r => (r._1, r._4))
+    assert(run(excludeSelf = true) == Seq(
+      (1L, 2L, 1.0, 1L), (1L, 2L, 0.5, 2L), (1L, 4L, 0.5, 3L),
+      (2L, 1L, 1.0, 1L), (2L, 3L, 1.0, 2L), (2L, 4L, 0.625, 3L)))
+    assert(run(excludeSelf = false) == Seq(
+      (1L, 1L, 1.0, 1L), (1L, 2L, 1.0, 2L), (1L, 2L, 0.5, 3L),
+      (2L, 2L, 1.125, 1L), (2L, 1L, 1.0, 2L), (2L, 3L, 1.0, 3L)))
+  }
+
   test("semanticDedup matches a sequential cluster-then-prune model") {
     val tau = 0.3
     val cents = VectorSearch.ivfCentroids(emb, "embedding", "vec_id", 16, Metric.Cosine)
